@@ -9,6 +9,7 @@ import os
 
 from .bpe import BpeModel
 from .corpus import CorpusArtifacts
+from .lineage import atomic_write
 from .normalize import NormArtifacts
 
 
@@ -35,8 +36,7 @@ def save_artifacts(artifacts: CorpusArtifacts, path: str) -> None:
         "n_vocab": artifacts.n_vocab,
         "hash_base": artifacts.hash_base,
     }
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(payload, f)
+    atomic_write(path, json.dumps(payload))
 
 
 def load_artifacts(path: str, vocab_df=None) -> CorpusArtifacts:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from .config import FlameConfig
 from .corpus import CorpusArtifacts, add_features, prepare_docs
 from .postings import CorpusStats, corpus_stats, doc_lengths
-from .segments import SEGMENT_SCHEMA, shard_span
+from .segments import build_segments
 
 
 def _sized_parts(df: DataFrame, cores: int, inflation: float = 1.0) -> int:
@@ -151,15 +151,6 @@ def doc_lengths_arith(docs: DataFrame, cfg: FlameConfig) -> DataFrame:
     return docs.select("doc_id", dl.cast("long").alias("dl"))
 
 
-def build_segments_direct(
-    scored: DataFrame, n_docs: int, n_shards: int, block_size: int
-) -> DataFrame:
-    """(term, doc_id, tf, s) -> segment rows via the shared encoder."""
-    from .segments import build_segments
-
-    return build_segments(scored, n_docs, n_shards, block_size)
-
-
 @dataclass
 class ServingIndex:
     """Minimal serving state: what WAND queries actually need."""
@@ -226,7 +217,7 @@ def build_serving_index(raw_docs: DataFrame, cfg: FlameConfig) -> ServingIndex:
     )
     feat = add_features(docs, artifacts, cfg)
     scored = scored_postings_direct(feat, stats, cfg.bm25_k1, cfg.bm25_b)
-    segments = build_segments_direct(
+    segments = build_segments(
         scored, stats.n_docs, cfg.n_shards, cfg.block_size
     )
     return ServingIndex(cfg=cfg, artifacts=artifacts, stats=stats, segments=segments)

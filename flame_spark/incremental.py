@@ -22,8 +22,10 @@ batch and re-derives everything downstream at merge time:
                               erased from every delta table by
                               ``purge_tombstones``
     data/<snap>/shard=NN/     merged block-max segments, one IMMUTABLE
-                              dir per merge (idempotent per-shard
-                              build via SegmentWarehouse lineage)
+                              dir per merge, written in one pass by
+                              SegmentWarehouse.build_snapshot;
+                              _lineage.json beside the shards records
+                              the finished ones for resume
     snapshots/                Iceberg-style snapshot log: each merge
                               commits one manifest + atomic HEAD swap;
                               readers pin a snapshot (time travel /
@@ -81,7 +83,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .artifacts_io import load_artifacts, save_artifacts
 from .config import FlameConfig
 from .corpus import CorpusArtifacts, add_doc_id, add_features, prepare_docs
-from .lineage import SegmentWarehouse
+from .lineage import SegmentWarehouse, atomic_write
 from .postings import (
     CorpusStats,
     build_postings,
@@ -220,8 +222,7 @@ class IncrementalIndexer:
             return json.load(f)
 
     def _save_state(self, state: dict) -> None:
-        with open(self.state_path, "w", encoding="utf-8") as f:
-            json.dump(state, f)
+        atomic_write(self.state_path, json.dumps(state))
 
     # -- build / ingest -----------------------------------------------------
 
@@ -680,9 +681,10 @@ class IncrementalIndexer:
             # the old generations NEXT TO the compacted one (double
             # counting)
             marker = os.path.join(base, ".compact.pending")
-            with open(marker + ".tmp", "w", encoding="utf-8") as f:
-                json.dump({"dest": os.path.basename(dest), "gens": gens}, f)
-            os.replace(marker + ".tmp", marker)
+            atomic_write(
+                marker,
+                json.dumps({"dest": os.path.basename(dest), "gens": gens}),
+            )
             for g in gens:
                 os.rename(os.path.join(base, g), os.path.join(base, g + ".old"))
             os.rename(dest + ".new", dest)

@@ -1,18 +1,23 @@
-"""Resumable, checkpointed segment builds with per-partition lineage.
+"""Resumable snapshot builds with per-shard lineage in the manifest.
 
 Production design targets Iceberg (atomic overwritePartitions + snapshot
 ids); the Iceberg runtime jars are not present in this sandbox, so the
 same protocol is implemented over a plain parquet warehouse:
 
-- the segment table is laid out as ``segments/shard=NN/`` partitions;
-- a ``lineage`` table records one row per completed shard:
-  (shard, input_snapshot, rows_in, rows_out, digest, completed_at);
-- resume = anti-join: shards already recorded for the SAME
-  input_snapshot are skipped; each shard write is idempotent (full
-  overwrite of its own partition directory followed by the lineage
-  append), so a kill between the two leaves a re-doable shard, never a
-  half-visible one;
-- a ``metrics`` table accumulates (run_id, stage, metric, value) rows.
+- each input snapshot is encoded into an IMMUTABLE data dir
+  ``data/<input_snapshot>/shard=NN/`` by ONE partitioned write
+  (dynamic partition overwrite: only the shards this pass encodes are
+  replaced);
+- one grouped aggregate over the just-written shards yields per-shard
+  lineage (shard, rows_in, rows_out, digest, bytes, seconds,
+  completed_at), saved atomically as ``data/<input_snapshot>/_lineage.json``
+  (the leading ``_`` keeps Spark readers off it) and copied into the
+  snapshot manifest's ``summary["lineage"]`` — the one place where
+  per-shard lineage and build metrics live;
+- resume: a shard is done if it has a lineage entry AND its dir still
+  holds parquet; a re-run encodes only the other shards. A kill before
+  the lineage save leaves re-doable shards, never a half-visible
+  table (readers only ever see committed manifests).
 
 The digest is order-insensitive (sum of xxhash64 over canonicalized
 row bytes) so it can be recomputed distributed at any parallelism.
@@ -26,172 +31,42 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .segments import SEGMENT_SCHEMA
+from .segments import SEGMENT_SCHEMA, build_segments, shard_of, shard_span
 
 #: "caller did not specify expected_parent" sentinel — distinct from
 #: None, which is a real expectation (an empty log).
 _UNSET = object()
+
+#: per-shard lineage of one input snapshot, beside its shard dirs
+_LINEAGE_FILE = "_lineage.json"
+
+
+def atomic_write(path: str, content: str) -> None:
+    """Replace ``path`` with ``content`` all-or-nothing: temp file,
+    fsync, ``os.replace``. A kill (or an exception) at any point leaves
+    either the old file or the new one, never a torn mix."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(content)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _parquet_files(shard_dir: str) -> list[str]:
+    try:
+        names = os.listdir(shard_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        os.path.join(shard_dir, f) for f in names if f.endswith(".parquet")
+    )
 
 
 class SegmentWarehouse:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-
-    @property
-    def segments_path(self) -> str:
-        return os.path.join(self.root, "segments")
-
-    @property
-    def lineage_path(self) -> str:
-        return os.path.join(self.root, "lineage")
-
-    @property
-    def metrics_path(self) -> str:
-        return os.path.join(self.root, "metrics")
-
-    # -- lineage ------------------------------------------------------------
-
-    def completed_shards(self, spark: SparkSession, input_snapshot: str) -> set[int]:
-        if not os.path.isdir(self.lineage_path):
-            return set()
-        rows = (
-            spark.read.parquet(self.lineage_path)
-            .filter(F.col("input_snapshot") == input_snapshot)
-            .select("shard")
-            .collect()
-        )
-        return {int(r["shard"]) for r in rows}
-
-    def record_lineage(
-        self,
-        spark: SparkSession,
-        shard: int,
-        input_snapshot: str,
-        rows_in: int,
-        rows_out: int,
-        digest: str,
-    ) -> None:
-        row = [
-            (
-                int(shard),
-                input_snapshot,
-                int(rows_in),
-                int(rows_out),
-                digest,
-                float(time.time()),
-            )
-        ]
-        spark.createDataFrame(
-            row,
-            "shard int, input_snapshot string, rows_in long, rows_out long, "
-            "digest string, completed_at double",
-        ).coalesce(1).write.mode("append").parquet(self.lineage_path)
-
-    def record_metric(
-        self, spark: SparkSession, run_id: str, stage: str, metric: str, value: float
-    ) -> None:
-        spark.createDataFrame(
-            [(run_id, stage, metric, float(value))],
-            "run_id string, stage string, metric string, value double",
-        ).coalesce(1).write.mode("append").parquet(self.metrics_path)
-
-    # -- segment build ------------------------------------------------------
-
-    def build_checkpointed(
-        self,
-        postings_scored: DataFrame,
-        n_docs: int,
-        n_shards: int,
-        block_size: int,
-        input_snapshot: str,
-        fail_after_shards: int | None = None,
-        out_root: str | None = None,
-    ) -> None:
-        """Build all shards, skipping ones already recorded in lineage.
-
-        ``fail_after_shards`` injects a crash after N shard commits —
-        used by the kill-and-resume test. ``out_root`` redirects the
-        shard partition dirs (default: the warehouse's mutable
-        ``segments/`` table; ``build_snapshot`` passes an immutable
-        per-snapshot dir instead).
-
-        Scale note: locally this loops shards on the driver (each shard
-        is one narrow job); on a real cluster the same protocol runs as
-        ONE job with dynamic-partition-overwrite — the loop exists to
-        make per-shard commit/kill semantics testable.
-        """
-        from .segments import build_segments, shard_span
-
-        spark = postings_scored.sparkSession
-        done = self.completed_shards(spark, input_snapshot)
-        if out_root is not None:
-            # lineage rows outlive snapshot expiry (append-only table);
-            # a shard only counts as done if its data dir still holds
-            # parquet files (expire() removes files, possibly leaving
-            # empty dirs), so rebuilding a previously-expired snapshot
-            # re-encodes the deleted shards instead of committing a
-            # manifest over missing files
-            def _has_parquet(shard: int) -> bool:
-                d = os.path.join(out_root, f"shard={shard}")
-                try:
-                    return any(f.endswith(".parquet") for f in os.listdir(d))
-                except FileNotFoundError:
-                    return False
-
-            done = {s for s in done if _has_parquet(s)}
-        span = shard_span(n_docs, n_shards)
-        # doc ids are dense over RAW rows while n_docs counts
-        # filtered-in docs, so the top ids can spill past
-        # n_shards * span — cover every shard actually present (same
-        # shard function build_segments applies)
-        max_doc = postings_scored.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-        n_shards_present = max(
-            n_shards, (int(max_doc) // span) + 1 if max_doc is not None else 0
-        )
-        built = 0
-        for shard in range(n_shards_present):
-            if shard in done:
-                continue
-            shard_t0 = time.time()
-            lo, hi = shard * span, (shard + 1) * span
-            part = postings_scored.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            )
-            seg = build_segments(part, n_docs, n_shards, block_size).filter(
-                F.col("shard") == shard
-            )
-            out_dir = os.path.join(
-                out_root or self.segments_path, f"shard={shard}"
-            )
-            seg.drop("shard").write.mode("overwrite").parquet(out_dir)
-            written = spark.read.parquet(out_dir)
-            rows_out = written.count()
-            rows_in = part.count()
-            digest_row = written.agg(
-                F.sum(
-                    F.xxhash64(
-                        "term", "n_docs", "first_doc", "last_doc", "doc_deltas"
-                    ).cast("decimal(38,0)")
-                ).alias("d")
-            ).collect()[0]
-            digest = str(digest_row["d"])
-            self.record_lineage(
-                spark, shard, input_snapshot, rows_in, rows_out, digest
-            )
-            dt = max(time.time() - shard_t0, 1e-9)
-            self.record_metric(
-                spark, input_snapshot, f"shard_{shard}", "postings_per_sec",
-                rows_in / dt,
-            )
-            built += 1
-            if fail_after_shards is not None and built >= fail_after_shards:
-                raise RuntimeError(f"injected failure after {built} shards")
-
-    def read_segments(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.segments_path).parquet(
-            self.segments_path
-        )
 
     # -- snapshots (Iceberg-style commit protocol) --------------------------
 
@@ -200,6 +75,19 @@ class SegmentWarehouse:
         if not hasattr(self, "_snapshot_log"):
             self._snapshot_log = SnapshotLog(self.root)
         return self._snapshot_log
+
+    def data_root(self, input_snapshot: str) -> str:
+        return os.path.join(self.root, "data", input_snapshot)
+
+    def shard_lineage(self, input_snapshot: str) -> dict[int, dict]:
+        """Per-shard lineage recorded so far for ``input_snapshot``
+        (empty if no pass has finished a shard)."""
+        path = os.path.join(self.data_root(input_snapshot), _LINEAGE_FILE)
+        try:
+            with open(path, encoding="utf-8") as f:
+                return {int(e["shard"]): e for e in json.load(f)}
+        except FileNotFoundError:
+            return {}
 
     def build_snapshot(
         self,
@@ -213,36 +101,114 @@ class SegmentWarehouse:
         summary: dict | None = None,
         expected_parent=_UNSET,
     ) -> str:
-        """Checkpointed shard build into an IMMUTABLE per-snapshot data
-        dir, then ONE atomic snapshot commit. Until the commit, readers
-        (``read_snapshot``) keep seeing the previous snapshot — a kill
-        mid-build leaves per-shard lineage for resume but never a
-        half-visible table. Returns the committed snapshot id.
+        """Encode every shard not yet done in ONE pass into the
+        IMMUTABLE per-snapshot data dir, then ONE atomic snapshot
+        commit. Until the commit, readers (``read_snapshot``) keep
+        seeing the previous snapshot — a kill mid-build leaves per-shard
+        lineage for resume but never a half-visible table. Returns the
+        committed snapshot id.
 
         Idempotent per input: if HEAD was already built from this exact
         ``input_snapshot``, its id is returned and nothing is committed
         — a job re-run (resume after success, scheduler retry) never
-        publishes duplicate snapshots."""
+        publishes duplicate snapshots.
+
+        ``fail_after_shards`` is the fault hook of the kill-and-resume
+        tests: the pass is limited to the first N missing shards, their
+        lineage is recorded, then it raises."""
         head = self.snapshot_log.current_id()
         if head is not None and (
             self.snapshot_log.manifest(head)["summary"].get("input_snapshot")
             == input_snapshot
         ):
             return head
-        data_root = os.path.join(self.root, "data", input_snapshot)
-        self.build_checkpointed(
-            postings_scored, n_docs, n_shards, block_size, input_snapshot,
-            fail_after_shards=fail_after_shards, out_root=data_root,
+        data_root = self.data_root(input_snapshot)
+        os.makedirs(data_root, exist_ok=True)
+
+        def shard_dir(shard: int) -> str:
+            return os.path.join(data_root, f"shard={shard}")
+
+        # a lineage entry outlives expire(), which deletes the files but
+        # may leave the dir: a shard is done only while it holds parquet
+        lineage = {
+            s: e
+            for s, e in self.shard_lineage(input_snapshot).items()
+            if _parquet_files(shard_dir(s))
+        }
+        shard = shard_of(shard_span(n_docs, n_shards))
+        todo = postings_scored
+        if lineage:
+            todo = todo.filter(~shard.isin(sorted(lineage)))
+        if fail_after_shards is not None:
+            missing = sorted(
+                int(r["s"])
+                for r in todo.select(shard.alias("s")).distinct().collect()
+            )[:fail_after_shards]
+            todo = todo.filter(shard.isin(missing))
+        t0 = time.time()
+        # doc ids are dense over RAW rows while n_docs counts filtered-in
+        # docs, so the top ids can spill past n_shards * span: the
+        # partitioned write covers every shard actually present
+        build_segments(todo, n_docs, n_shards, block_size).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "shard"
+        ).parquet(data_root)
+        written = [
+            s
+            for s in sorted(
+                int(d[len("shard="):])
+                for d in os.listdir(data_root)
+                if d.startswith("shard=")
+            )
+            if s not in lineage and _parquet_files(shard_dir(s))
+        ]
+        if written:
+            stats = (
+                postings_scored.sparkSession.read.schema(SEGMENT_SCHEMA)
+                .option("basePath", data_root)
+                .parquet(*map(shard_dir, written))
+                .groupBy("shard")
+                .agg(
+                    F.count("*").alias("rows_out"),
+                    F.sum("n_docs").alias("rows_in"),
+                    F.sum(
+                        F.xxhash64(
+                            "term", "n_docs", "first_doc", "last_doc",
+                            "doc_deltas",
+                        ).cast("decimal(38,0)")
+                    ).alias("digest"),
+                )
+                .collect()
+            )
+            now = time.time()
+            for r in stats:
+                k = int(r["shard"])
+                lineage[k] = {
+                    "shard": k,
+                    "rows_in": int(r["rows_in"]),
+                    "rows_out": int(r["rows_out"]),
+                    "digest": str(r["digest"]),
+                    "bytes": sum(
+                        os.path.getsize(f) for f in _parquet_files(shard_dir(k))
+                    ),
+                    "seconds": now - t0,
+                    "completed_at": now,
+                }
+        entries = [lineage[k] for k in sorted(lineage)]
+        atomic_write(
+            os.path.join(data_root, _LINEAGE_FILE),
+            json.dumps(entries, indent=1),
         )
-        files = sorted(
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(data_root)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        if fail_after_shards is not None and len(written) >= fail_after_shards:
+            raise RuntimeError(
+                f"injected failure after {len(written)} shards"
+            )
+        files = [f for e in entries for f in _parquet_files(shard_dir(e["shard"]))]
         s = dict(summary or {})
         s.setdefault("input_snapshot", input_snapshot)
         s.setdefault("n_shards", n_shards)
+        s["lineage"] = entries
         return self.snapshot_log.commit(
             files, base=data_root, operation=operation, summary=s,
             expected_parent=expected_parent,
@@ -253,11 +219,14 @@ class SegmentWarehouse:
     ) -> DataFrame:
         """Segment table AT a snapshot (default: current HEAD) — reads
         exactly the manifest's file list, so concurrent builds/merges
-        never tear a read. Schema matches ``read_segments`` (the
-        ``shard`` partition column is restored via basePath)."""
+        never tear a read. The ``shard`` partition column is restored
+        via basePath; a snapshot of an empty corpus reads as an empty
+        segment table."""
         m = self.snapshot_log.manifest(snap_id)
         base = os.path.join(self.root, m["base"])
         files = [os.path.join(self.root, f) for f in m["files"]]
+        if not files:
+            return spark.createDataFrame([], SEGMENT_SCHEMA)
         return spark.read.option("basePath", base).parquet(*files)
 
 
@@ -339,14 +308,6 @@ class SnapshotLog:
     # agree on what "caller did not specify" looks like
     _UNSET = _UNSET
 
-    def _atomic_write(self, path: str, content: str) -> None:
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(content)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-
     def _commit_lock(self):
         """Exclusive advisory lock serializing the read-check-swap span
         of every HEAD writer. Without it commit(expected_parent=...) is
@@ -416,10 +377,10 @@ class SnapshotLog:
             # manifest first (immutable, invisible), HEAD swap last
             # (atomic visibility) — a kill between the two leaves HEAD
             # unchanged
-            self._atomic_write(
+            atomic_write(
                 self._snap_path(sid), json.dumps(manifest, indent=1)
             )
-            self._atomic_write(self._head, sid)
+            atomic_write(self._head, sid)
         return sid
 
     def rollback(self, snap_id: str) -> None:
@@ -430,7 +391,7 @@ class SnapshotLog:
             chain = {m["snapshot_id"] for m in self.snapshots()}
             if snap_id not in chain:
                 raise ValueError(f"{snap_id!r} is not an ancestor of HEAD")
-            self._atomic_write(self._head, snap_id)
+            atomic_write(self._head, snap_id)
 
     def expire(self, keep_last: int = 2) -> list[str]:
         """Drop snapshots older than the newest ``keep_last`` on the
@@ -465,7 +426,7 @@ class SnapshotLog:
             # snapshots() never dereferences an expired manifest
             oldest = dict(keep[-1])
             oldest["parent_id"] = None
-            self._atomic_write(
+            atomic_write(
                 self._snap_path(oldest["snapshot_id"]),
                 json.dumps(oldest, indent=1),
             )

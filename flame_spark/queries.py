@@ -16,6 +16,7 @@ sides hash-identical:
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -933,7 +934,9 @@ SQL_INCREMENTAL_DELETE = SQL_INCREMENTAL_EXTEND.replace(
 # RECOMPUTATIONS of the documented protocols sharing no engine code,
 # see that file's docstring). Every fixture joins on a digest the
 # SQL recomputes from the live table, so stale fixtures mismatch loudly.
-_FIXDIR = "/root/repo/tests/fixtures"
+_FIXDIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "fixtures"
+)
 
 SQL_MM_IMAGE_FEATURES = (
     "SELECT media_id, n_features, mean_feature "

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .constants import BLOCK_SIZE
 from .postings import CorpusStats
@@ -97,6 +97,11 @@ def shard_span(n_docs: int, n_shards: int) -> int:
     return max(1, -(-n_docs // n_shards))  # ceil
 
 
+def shard_of(span: int) -> Column:
+    """Doc-range shard id of a posting row (``doc_id // span``)."""
+    return (F.col("doc_id") / F.lit(span)).cast("int")
+
+
 def postings_with_scores(
     postings_dl: DataFrame,
     term_stats_df: DataFrame,
@@ -144,7 +149,7 @@ def build_segments(
     # clock. HashPartitioning(shard, n_shards) satisfies the groupBy's
     # ClusteredDistribution, so no second exchange.
     with_shard = postings_scored.withColumn(
-        "shard", (F.col("doc_id") / F.lit(span)).cast("int")
+        "shard", shard_of(span)
     ).repartition(n_shards, "shard")
 
     def encode_shard(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap default: half the machine's physical RAM, at least
+    1g and at most 48g (``FLAME_DRIVER_MEM`` overrides it). A heap
+    larger than the machine lets the JVM grow until the kernel kills
+    it instead of collecting garbage."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "flame_spark",
     cpus: int | None = None,
@@ -33,7 +43,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("FLAME_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("FLAME_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -8,9 +8,10 @@ scaling_one_run, already covered by test_bench_scaling_gate)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from tools import accumulate_scaling as acc

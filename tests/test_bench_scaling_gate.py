@@ -14,9 +14,11 @@ outvote a stolen invocation."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench
 
@@ -169,9 +171,9 @@ def test_engine_digest_modules_equal_import_closure():
     flame_spark-internal import closure of the measured build path —
     if an import drifts outside the list, the digest would call
     changed code 'identical' and pool incomparable history samples."""
-    import ast, os
+    import ast
 
-    base = "/root/repo/flame_spark"
+    base = os.path.join(REPO, "flame_spark")
 
     def internal_imports(mod):
         path = os.path.join(base, f"{mod}.py")

@@ -76,53 +76,52 @@ def test_wand_equals_exhaustive(spark, built):
 
 def test_kill_and_resume_identical(spark, built, tmp_path):
     from flame_spark.lineage import SegmentWarehouse, snapshot_id
-    from flame_spark.segments import postings_with_scores
+    from flame_spark.segments import build_segments, postings_with_scores
 
     index, segments = built
     scored = postings_with_scores(
         index.postings_dl, index.stats_df, index.stats, CFG.bm25_k1, CFG.bm25_b
     ).persist()
     snap = snapshot_id(index.postings, ["term", "doc_id", "tf"])
+    n_docs = index.stats.n_docs
 
     # run A: straight-through build
     wh_a = SegmentWarehouse(str(tmp_path / "a"))
-    wh_a.build_checkpointed(scored, index.stats.n_docs, CFG.n_shards, CFG.block_size, snap)
+    wh_a.build_snapshot(scored, n_docs, CFG.n_shards, CFG.block_size, snap)
 
-    # run B: killed after 2 shards, then resumed
+    # run B: killed after 2 shards (nothing committed), then resumed
     wh_b = SegmentWarehouse(str(tmp_path / "b"))
     with pytest.raises(RuntimeError, match="injected failure"):
-        wh_b.build_checkpointed(
-            scored, index.stats.n_docs, CFG.n_shards, CFG.block_size, snap,
+        wh_b.build_snapshot(
+            scored, n_docs, CFG.n_shards, CFG.block_size, snap,
             fail_after_shards=2,
         )
-    done_before = wh_b.completed_shards(spark, snap)
-    assert len(done_before) == 2
-    wh_b.build_checkpointed(scored, index.stats.n_docs, CFG.n_shards, CFG.block_size, snap)
+    assert wh_b.snapshot_log.current_id() is None
+    assert len(wh_b.shard_lineage(snap)) == 2
+    wh_b.build_snapshot(scored, n_docs, CFG.n_shards, CFG.block_size, snap)
 
-    def table_key(wh):
-        rows = wh.read_segments(spark).collect()
+    def table_key(df):
         return sorted(
             (r["shard"], r["term"], r["n_docs"], bytes(r["doc_deltas"]),
              bytes(r["tfs"]), bytes(r["scores"]), tuple(r["block_max"]))
-            for r in rows
+            for r in df.collect()
         )
 
-    assert table_key(wh_a) == table_key(wh_b)
-    # resume skipped the completed shards (lineage rows not duplicated):
-    # exactly one lineage row per shard PRESENT (raw-dense doc ids can
-    # spill one shard past n_shards — the warehouse must cover it, and
-    # the warehouse table must equal the one-shot build_segments table)
-    lineage = spark.read.parquet(wh_b.lineage_path).collect()
-    from flame_spark.segments import build_segments
-
-    direct = build_segments(
-        scored, index.stats.n_docs, CFG.n_shards, CFG.block_size
-    )
+    # the resumed table equals the straight-through one and the one-shot
+    # build_segments table
+    direct = build_segments(scored, n_docs, CFG.n_shards, CFG.block_size)
+    key_b = table_key(wh_b.read_snapshot(spark))
+    assert key_b == table_key(wh_a.read_snapshot(spark))
+    assert key_b == table_key(direct)
+    # resume skipped the completed shards (lineage not duplicated):
+    # exactly one lineage entry per shard PRESENT (raw-dense doc ids can
+    # spill one shard past n_shards — the warehouse must cover it)
+    lineage = wh_b.snapshot_log.manifest()["summary"]["lineage"]
     shards_present = {
         int(r["shard"]) for r in direct.select("shard").distinct().collect()
     }
     assert len(lineage) == len(shards_present)
-    assert {int(r["shard"]) for r in lineage} == shards_present
+    assert {e["shard"] for e in lineage} == shards_present
 
 
 def test_wand_exclude_docs_live_delete_semantics(spark, built):

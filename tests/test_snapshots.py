@@ -51,6 +51,31 @@ def _table_key(df):
     )
 
 
+def _counting_jobs(spark, build):
+    """-> (build(), number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _manifest_row_counts(wh, snap_id):
+    import pyarrow.parquet as pq
+
+    return [
+        pq.ParquetFile(f).metadata.num_rows
+        for f in wh.snapshot_log.files(snap_id)
+    ]
+
+
 @pytest.fixture(scope="module")
 def corpora(spark):
     small = _scored(spark, 5)
@@ -72,12 +97,31 @@ def test_commit_visibility_and_time_travel(spark, corpora, tmp_path):
     assert log.current_id() == sid_a
     key_a = _table_key(wh.read_snapshot(spark))
 
-    sid_b = wh.build_snapshot(
+    scored_b.count()  # fill the persisted input before counting jobs
+    sid_b, jobs_3 = _counting_jobs(spark, lambda: wh.build_snapshot(
         scored_b, n_b, CFG.n_shards, CFG.block_size, snap_b
-    )
+    ))
     assert log.current_id() == sid_b
     key_b = _table_key(wh.read_snapshot(spark))
     assert key_b != key_a
+
+    # one pass per build: the job count does not grow with the shard
+    # count, and no committed file is an empty shard
+    wh1 = SegmentWarehouse(str(tmp_path / "wh1"))
+    sid_1, jobs_1 = _counting_jobs(spark, lambda: wh1.build_snapshot(
+        scored_b, n_b, 1, CFG.block_size, snap_b
+    ))
+    assert jobs_1 == jobs_3
+    for w, sid in ((wh, sid_a), (wh, sid_b), (wh1, sid_1)):
+        counts = _manifest_row_counts(w, sid)
+        assert counts and min(counts) >= 1
+    # an empty corpus commits no file and reads as an empty table
+    wh0 = SegmentWarehouse(str(tmp_path / "wh0"))
+    sid_0 = wh0.build_snapshot(
+        scored_b.limit(0), 0, CFG.n_shards, CFG.block_size, "empty"
+    )
+    assert wh0.snapshot_log.files(sid_0) == []
+    assert wh0.read_snapshot(spark).count() == 0
 
     # time travel: the old snapshot still serves its exact old content
     assert _table_key(wh.read_snapshot(spark, sid_a)) == key_a

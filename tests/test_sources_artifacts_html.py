@@ -120,7 +120,7 @@ def test_cli_inter_mode_rectangular(tmp_path):
             "--vocab_size", "300", "--no_reports",
             "--output_dir", str(out), "--cpus", "2",
         ],
-        cwd="/root/repo", capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))), capture_output=True, text=True, timeout=300,
     )
     assert r.returncode == 0, r.stdout + r.stderr
     assert "inter-comparison mode" in r.stdout

@@ -1,5 +1,7 @@
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def test_stateful_conversation_state(spark, tmp_path):
     from pyspark.sql import functions as F

@@ -433,3 +433,28 @@ def test_stream_null_conv_id_fails_parquet_batch(spark, tmp_path):
     with pytest.raises(Exception, match="malformed"):
         ingest_stream(idx, spark, str(stream_dir), str(tmp_path / "ck"),
                       on_oov="drop")
+
+
+def test_failed_state_write_keeps_previous_state(tmp_path, monkeypatch):
+    """A ``state.json`` rewrite that dies part-way leaves the previous
+    state loadable: the new state goes to a temp file that replaces the
+    old one only once complete, never a torn in-place rewrite."""
+    import flame_spark.lineage as lineage
+
+    idx = IncrementalIndexer(str(tmp_path / "wh"), CFG)
+    before = {"n_ingests": 1, "next_doc_id": 10}
+    idx._save_state(before)
+    # dies mid-dump: a value json cannot encode, after encodable ones
+    with pytest.raises(TypeError):
+        idx._save_state({"n_ingests": 2, "next_doc_id": 20, "x": object()})
+    assert idx._load_state() == before
+
+    # dies after the bytes are written but before they are durable
+    def killed(fd):
+        raise OSError("killed before fsync")
+
+    monkeypatch.setattr(lineage.os, "fsync", killed)
+    with pytest.raises(OSError):
+        idx._save_state({"n_ingests": 2, "next_doc_id": 20})
+    monkeypatch.undo()
+    assert idx._load_state() == before

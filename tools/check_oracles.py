@@ -5,11 +5,12 @@ same sf dir, compare row count + schema-insensitive sorted values."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None

@@ -28,7 +28,7 @@ Every fixture row is keyed by a digest the oracle SQL recomputes from
 the LIVE table and joins on, so a changed corpus yields zero rows (a
 visible mismatch), never a stale pass.
 
-Run: PYTHONPATH=/root/repo python tools/gen_fixture_oracles.py
+Run from the repo root: python tools/gen_fixture_oracles.py
 Rewrites tests/fixtures/*.parquet (single-file parquet via duckdb).
 """
 
@@ -41,9 +41,10 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-FIXDIR = "/root/repo/tests/fixtures"
+FIXDIR = os.path.join(REPO, "tests", "fixtures")
 SF_DIRS = [
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",

@@ -43,11 +43,12 @@ the summary line reports n_input/n_kept. (The counts are two extra
 tiny actions here; at warehouse scale hang them on ``df.observe`` of
 the build job instead.)
 
-Builds the serving index (two-exchange path), writes checkpointed
-segment shards with lineage + metrics into <warehouse_dir>, then (if a
-queries JSON list of {query_id, query_text} is given) answers them with
-block-max WAND over the shard-partitioned cache and prints one JSON
-line per result. On a real cluster, replace --master with yarn/k8s —
+Builds the serving index (two-exchange path), writes every segment
+shard in one pass into <warehouse_dir> with per-shard lineage in the
+snapshot manifest, then (if a queries JSON list of {query_id,
+query_text} is given) answers them with block-max WAND over the
+shard-partitioned cache and prints one JSON line per result. On a
+real cluster, replace --master with yarn/k8s —
 nothing in the job is local-mode-specific (the parquet warehouse
 stands in for Iceberg; jars are absent in this sandbox).
 """
@@ -129,7 +130,7 @@ def main(argv: list[str]) -> int:
         add_features(docs, artifacts, cfg), stats, cfg.bm25_k1, cfg.bm25_b
     ).persist()
 
-    # checkpointed write with lineage + metrics (resume-safe), published
+    # one-pass shard write with per-shard lineage (resume-safe), published
     # as ONE atomic snapshot commit: readers of the warehouse keep the
     # previous snapshot until every shard is built; a re-run of the same
     # input commits nothing (idempotent)

@@ -21,9 +21,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv=None) -> int:
@@ -78,8 +79,6 @@ def main(argv=None) -> int:
     # joins over warehouse paths, but `merge` re-scores postings, so
     # the build cfg (persisted in state.json since the cfg key landed)
     # is reconstructed when present; tombstone ops work either way.
-    import os
-
     from flame_spark.config import FlameConfig
     from flame_spark.incremental import IncrementalIndexer
     from flame_spark.session import get_spark
